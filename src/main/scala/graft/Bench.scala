@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.core.GraftSession
 
 /** Benchmark main (driver contract): one JSON line with per-query seconds.
   *
@@ -15,7 +16,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * window always sits past the JIT decay knee), then `reps` (default
   * 3) timed runs with a GC + listener settle between; the reported
   * per-query second is the MEDIAN of those reps, the total their sum.
-  * Why: profiling (tools/BenchOne listener breakdown) shows a query's
+  * Why: profiling (the stage ledger of tools/Profile) shows a query's
   * first execution in a JVM spends 3-10x its steady-state cost in
   * executor-side warm-up, and — the r14/r15 finding — the decay curve
   * EXTENDS THROUGH ~5 EXECUTIONS for codegen-heavy queries (q186:
@@ -53,8 +54,20 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * loudly marks its artifact `"filtered":true`.
   */
 object Bench {
-  private def materialize(df: DataFrame): Unit =
+  private[graft] def materialize(df: DataFrame): Unit =
     df.write.format("noop").mode("overwrite").save()
+
+  /** Session warm-up before any timed query: count every table (loads
+    * the relation memo and the parquet footers) and run q01 once (JIT,
+    * codegen, the noop sink). Failures are ignored: a missing table only
+    * matters to the queries that read it, and those report it. */
+  private[graft] def warmUp(spark: SparkSession, sfDir: String): Unit = {
+    for (t <- graft.core.Tables.all)
+      try graft.core.Tables.load(spark, sfDir, t).count()
+      catch { case _: Throwable => }
+    try materialize(SparkEntry.queries("q01_pricing_summary")(spark, sfDir))
+    catch { case _: Throwable => }
+  }
 
   /** Anchor-hygiene preflight (the r13 anchor-A lesson made mechanical):
     * 1115 stale `/tmp/graft-*` dirs (~16 GB) from accumulated test runs
@@ -117,19 +130,9 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val staleDirs = tmpPreflight()
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = graft.core.GraftSession.configure(
-      SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-    ).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    for (t <- graft.core.Tables.all)
-      try graft.core.Tables.load(spark, sfDir, t).count()
-      catch { case _: Throwable => }
-    try materialize(SparkEntry.queries("q01_pricing_summary")(spark, sfDir))
-    catch { case _: Throwable => }
+    val cpus = GraftSession.defaultCores
+    val spark = GraftSession.local(cpus)
+    warmUp(spark, sfDir)
 
     // measurement isolation: collect the PREVIOUS queries' garbage before
     // each timed rep, or a heavy predecessor's heap debt lands in an

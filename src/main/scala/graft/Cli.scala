@@ -166,9 +166,7 @@ object Cli {
       return
     }
     val dir = f.getOrElse("dir", "./db")
-    lazy val spark = graft.core.GraftSession.local(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS",
-        Runtime.getRuntime.availableProcessors().toString).toInt)
+    lazy val spark = graft.core.GraftSession.local()
     lazy val table = {
       val t = f.getOrElse("table", sys.error("-table is required"))
       new GraftTable(spark, s"$dir/$t")

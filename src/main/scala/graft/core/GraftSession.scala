@@ -10,25 +10,8 @@ import org.apache.spark.sql.SparkSession
   */
 object GraftSession {
 
-  /** Apply graft's standard config to any builder (used by mains/tests).
-    *
-    * Dev A/B hook (r18): `SPARK_GRAFT_EXTRA_CONF="k=v;k2=v2"` applies
-    * overrides LAST, so a measurement run can flip one setting (e.g. the
-    * shuffle-writer threshold) without a code edit. Unset — the only
-    * state the driver's bench/verify runs see — it is a no-op.
-    */
-  def configure(b: SparkSession.Builder): SparkSession.Builder = {
-    val configured = configureBase(b)
-    sys.env.get("SPARK_GRAFT_EXTRA_CONF").toSeq
-      .flatMap(_.split(';')).map(_.trim).filter(_.contains('='))
-      .foldLeft(configured) { (bb, kv) =>
-        val Array(k, v) = kv.split("=", 2)
-        System.err.println(s"[graft] EXTRA_CONF override: $k=$v")
-        bb.config(k.trim, v.trim)
-      }
-  }
-
-  private def configureBase(b: SparkSession.Builder): SparkSession.Builder =
+  /** Apply graft's standard config to any builder (used by mains/tests). */
+  def configure(b: SparkSession.Builder): SparkSession.Builder =
     b.config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
@@ -66,11 +49,20 @@ object GraftSession {
       .config("spark.sql.extensions", "graft.expressions.GraftExtensions")
       .config("spark.ui.enabled", "false")
 
-  /** `maxTaskFailures > 1` enables local-mode task retry (the
+  /** Core count for a local session: `SPARK_GRAFT_CPUS` if set, else the
+    * machine's processor count. The one place the environment picks it. */
+  def defaultCores: Int =
+    sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors())
+
+  /** The session every graft main and spec runs on: `local[cores]`, one
+    * shuffle partition per core, the [[configure]] settings, WARN logs.
+    *
+    * `maxTaskFailures > 1` enables local-mode task retry (the
     * `local[N,F]` master form) — a cluster has this by default
     * (spark.task.maxFailures=4); local mode fails the job on the first
     * task error unless asked. The chaos/recovery specs need one retry. */
-  def local(cores: Int = Runtime.getRuntime.availableProcessors(),
+  def local(cores: Int = defaultCores,
       maxTaskFailures: Int = 1): SparkSession = {
     val master =
       if (maxTaskFailures > 1) s"local[$cores,$maxTaskFailures]"

@@ -38,6 +38,15 @@ class PhaseMeter extends SparkListener {
     var shufRead = 0L
     var tasks = 0L
     var jobWallMs = 0L
+
+    def add(o: Acc): Unit = {
+      cpuMs += o.cpuMs; runMs += o.runMs
+      memSpill += o.memSpill; diskSpill += o.diskSpill
+      inBytes += o.inBytes; inRecords += o.inRecords
+      outBytes += o.outBytes; outRecords += o.outRecords
+      shufWrite += o.shufWrite; shufRead += o.shufRead
+      tasks += o.tasks; jobWallMs += o.jobWallMs
+    }
   }
 
   private val stageToPhase = mutable.Map.empty[Int, String]
@@ -112,6 +121,13 @@ class PhaseMeter extends SparkListener {
         s""""shuf_w_mb":${mb(a.shufWrite)},"shuf_r_mb":${mb(a.shufRead)},""" +
         s""""spill_mem_mb":${mb(a.memSpill)},"spill_disk_mb":${mb(a.diskSpill)}}"""
     }.mkString("{", ",", "}")
+  }
+
+  /** Every phase folded into one row: the whole run's totals. */
+  def total(): Acc = synchronized {
+    val t = new Acc
+    acc.values.foreach(t.add)
+    t
   }
 
   /** (cpuMs, tasks) for one phase — spec hook. */

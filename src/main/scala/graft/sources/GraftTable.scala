@@ -786,7 +786,6 @@ class GraftTable(spark: SparkSession, root: String) {
     // spark.read itself spawns the mergeSchema footer job — tag it apart
     // from the write so file-count-bound work is visible separately
     val df = withJobDesc("graft.digest.schema")(readDirs(logs ++ consumedBlocks))
-    val n = math.max(1L, segRows)
     val tmp = blocksP.resolve(s".tmp-${java.util.UUID.randomUUID()}")
     // the Spark write is the long pole: refresh the lock before and
     // after so a > staleMs compaction isn't broken as "crashed"
@@ -805,34 +804,25 @@ class GraftTable(spark: SparkSession, root: String) {
     // at cluster scale a compaction is then pure streaming I/O, never an
     // all-data shuffle. Stats ride the write (observe) — the post-write
     // rescan is gone; segRows from the sidecar cross-checks for free.
-    // GRAFT_DIGEST_SHUFFLE=1 keeps the legacy path runnable for A/B.
-    val legacyShuffle = sys.env.get("GRAFT_DIGEST_SHUFFLE").contains("1") ||
-      sys.props.get("graft.digest.shuffle").contains("1")
     val splitConf = "spark.sql.files.maxPartitionBytes"
     val openConf = "spark.sql.files.openCostInBytes"
     val prevSplit = spark.conf.getOption(splitConf)
     val prevOpen = spark.conf.getOption(openConf)
     val seg0 =
       try {
-        if (!legacyShuffle) {
-          val bytes = (logs ++ consumedBlocks).map(dirBytes).sum
-          val par = math.max(1, spark.sparkContext.defaultParallelism)
-          val split = math.min(128L << 20,
-            math.max(4L << 20, bytes / (2L * par)))
-          spark.conf.set(splitConf, split.toString)
-          // the default 4 MiB open cost makes every sub-4MiB log file
-          // its own split — a 24-batch log would fan into one task per
-          // file and one TINY output file per task; ingest logs are
-          // exactly the many-small-files shape, so pack them densely
-          spark.conf.set(openConf, (256L << 10).toString)
-        }
+        val bytes = (logs ++ consumedBlocks).map(dirBytes).sum
+        val par = math.max(1, spark.sparkContext.defaultParallelism)
+        val split = math.min(128L << 20,
+          math.max(4L << 20, bytes / (2L * par)))
+        spark.conf.set(splitConf, split.toString)
+        // the default 4 MiB open cost makes every sub-4MiB log file
+        // its own split — a 24-batch log would fan into one task per
+        // file and one TINY output file per task; ingest logs are
+        // exactly the many-small-files shape, so pack them densely
+        spark.conf.set(openConf, (256L << 10).toString)
         observedStats(df, tmp, "block", expectedRows = Some(segRows)) { d =>
           withJobDesc("graft.digest.write") {
-            val out = if (legacyShuffle)
-              d.repartition(math.max(1,
-                (n / ChunkSize).toInt + (if (n % ChunkSize > 0) 1 else 0)))
-            else d
-            out.write
+            d.write
               .option("maxRecordsPerFile", ChunkSize.toLong)
               .option("parquet.block.size", (8L * 1024 * 1024).toString)
               .mode(SaveMode.ErrorIfExists)

@@ -1,12 +1,11 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Candidate-volume instrument for every pair-generating family — the
-  * r14 PairStatsDev lesson (q195) made general: when a pair-heavy
-  * query's wall drifts between rounds, the FIRST question is whether the
-  * input distribution moved (gram/fingerprint/bucket fan-out) or the
+/** Candidate-volume instrument for every pair-generating family: when a
+  * pair-heavy query's wall drifts between rounds, the FIRST question is
+  * whether the input distribution moved (gram/fingerprint/bucket fan-out) or the
   * plan did. This tool prints ONE machine-diffable JSON line per family,
   * measuring the exact candidate-generation stage each operator builds —
   * same parameters as the bench catalog queries — so a future drift is
@@ -17,7 +16,6 @@ import org.apache.spark.sql.functions._
   *  - `containment` — [[graft.operators.Dedup.containmentPairs]] (q180)
   *  - `lsh_minhash` — [[graft.operators.Dedup.lshCandidates]] (q35/q74)
   *  - `lsh_planes`  — [[graft.operators.Similarity.lshBuckets]] (q194)
-  *  - `setsim`      — covered by the original PairStatsDev (q195)
   *
   * `runMain graft.tools.PairVolumes [sfDir] [family…]` (no family = all).
   */
@@ -26,9 +24,7 @@ object PairVolumes {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val fams = if (args.length > 1) args.drop(1).toSet
       else Set("winnow", "containment", "lsh_minhash", "lsh_planes")
-    val spark = graft.core.GraftSession.configure(
-      SparkSession.builder().master("local[16]")
-        .config("spark.sql.shuffle.partitions", 16)).getOrCreate()
+    val spark = graft.core.GraftSession.local(16)
     spark.sparkContext.setLogLevel("ERROR")
     val docs = graft.core.Tables.load(spark, dir, "documents")
 

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Multi-rep per-query bench: Bench's exact methodology (noop-sink full
   * materialization, untimed warm-up, GC between timed runs) but with N
   * timed reps per query, reporting median/min/max — the
@@ -42,11 +40,7 @@ object ScaleBench {
             s"top$n+allow to include): ${skip.map(_._1).mkString(", ")}")
         keep.take(n).map(_._1)
       } else sel.split(",").toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.core.GraftSession.configure(
-      SparkSession.builder().master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.GraftSession.local()
     val meter = new graft.core.SpillMeter
     spark.sparkContext.addSparkListener(meter)
     for (t <- graft.core.Tables.all)

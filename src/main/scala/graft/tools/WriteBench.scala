@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Write-path scale benchmark (the r11 verdict's unmeasured axis): the
@@ -27,11 +26,7 @@ object WriteBench {
     val batches = args.lift(1).map(_.toInt).getOrElse(24)
     val work = args.lift(2).getOrElse(
       java.nio.file.Files.createTempDirectory("graft-writebench").toString)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.core.GraftSession.configure(
-      SparkSession.builder().master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.GraftSession.local()
 
     // the ingest payload: 8 typed columns of lineitem (the reference's
     // ingest benches comparable-width records), longs + strings
