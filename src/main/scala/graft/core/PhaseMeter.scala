@@ -4,12 +4,12 @@ import org.apache.spark.scheduler._
 
 import scala.collection.mutable
 
-/** Per-PHASE task-metric attribution, keyed by Spark job description —
-  * the r12 write-path lesson operationalized: whole-run task CPU said
-  * "digest exponent 1.6–2.2, undiagnosed", and diagnosis needs the
-  * number split by stage of the digest (the repartition shuffle, the
-  * post-write stats rescan, the read-back scan) rather than re-guessed
-  * from wall on a disk whose wall swings 4×.
+/** Per-PHASE task-metric attribution, keyed by Spark job description,
+  * and the one task-metric listener of the measurement tools: Bench's
+  * per-rep ledger reads [[total]], WriteBench the per-phase rows. Whole-run
+  * task CPU alone cannot say which stage of a multi-stage operation grew
+  * (the digest's repartition shuffle, post-write stats rescan, read-back
+  * scan); guessing it from wall fails on a disk whose wall swings 4×.
   *
   * [[graft.sources.GraftTable]] tags each internal Spark action with
   * `sc.setJobDescription("graft.digest.write")` etc. (job descriptions
@@ -18,11 +18,12 @@ import scala.collection.mutable
   * description. Tasks from untagged jobs land under `"(untagged)"` so
   * the total stays a checksum of the whole run.
   *
-  * Metrics per phase: task executorCpuTime (the one number a noisy
-  * virtual disk cannot distort — SpillMeter scaladoc), task wall
-  * (executorRunTime: includes stalls, so cpu/run is a memory-pressure
-  * signal), spills, input/output/shuffle volumes, and task count
-  * (scheduler-overhead signal for the ~916-part writer at sf10).
+  * Metrics per phase: task executorCpuTime (actual CPU cycles, the one
+  * number neither idle cores nor GC/memory-bandwidth stalls distort: a
+  * quadratic pair blow-up can read as wall exponent 1.2 while CPU grows
+  * at 2.2), task wall (executorRunTime: includes stalls, so cpu/run is a
+  * memory-pressure signal), spills, input/output/shuffle volumes, and
+  * task count (a scheduler-overhead signal).
   */
 class PhaseMeter extends SparkListener {
   final class Acc {
@@ -94,7 +95,7 @@ class PhaseMeter extends SparkListener {
   }
 
   /** Wait (bounded) for the async listener bus to drain — two agreeing
-    * 50 ms-apart snapshots, or ~2 s (the SpillMeter convention). */
+    * 50 ms-apart snapshots, or ~2 s. */
   def settle(): Unit = {
     def snap: Seq[(String, Long, Long)] = synchronized {
       acc.toSeq.map { case (k, a) => (k, a.cpuMs, a.tasks) }

@@ -2,10 +2,10 @@ package graft.tools
 
 import org.apache.spark.sql.functions._
 
-/** Write-path scale benchmark (the r11 verdict's unmeasured axis): the
-  * reference treats continuous ingest + digest as first-class
-  * (scripts/stress_ingest_digest.sh, steady_ingest.sh); SCALE.md was
-  * query-side only. Measures, against a fresh [[graft.sources.GraftTable]]
+/** Write-path scale benchmark: the reference treats continuous ingest +
+  * digest as first-class (scripts/stress_ingest_digest.sh,
+  * steady_ingest.sh), so the write path gets its own decade record.
+  * Measures, against a fresh [[graft.sources.GraftTable]]
   * on lineitem rows at the chosen SF:
   *
   *  - `ingest`: N batched appends (row-store log segments + per-batch
@@ -46,20 +46,13 @@ object WriteBench {
     val root = java.nio.file.Paths.get(work, "t").toString
     val t = new graft.sources.GraftTable(spark, root)
 
-    // wall AND per-phase TASK executor CPU (SpillMeter, the ScaleBench
-    // metric): the q177 lesson applied to the write path — but with the
-    // write-path twist this session measured: on a noisy virtual disk,
-    // identical back-to-back digests swing 4× in WALL, and whole-PROCESS
-    // CPU tracks wall × busy-cores so it inherits the same noise (and
-    // GC time, metered, was < 1% — not the cause). Task executorCpuTime
-    // counts actual task cycles only, so it is the one number the disk
-    // cannot distort.
-    val meter = new graft.core.SpillMeter
-    spark.sparkContext.addSparkListener(meter)
-    // r13 (the r12 verdict's top ask): per-PHASE attribution — the
-    // whole-section task CPU said "digest exponent 1.6–2.2, undiagnosed";
-    // PhaseMeter splits it by the digest's own stages (schema merge,
-    // repartition+write, post-write stats rescan) via job descriptions.
+    // wall AND task executor CPU, split per phase by job description
+    // (schema merge, repartition+write, post-write stats rescan): on a
+    // noisy virtual disk identical back-to-back digests swing 4× in
+    // WALL, and whole-PROCESS CPU tracks wall × busy-cores so it inherits
+    // the same noise (GC time, metered, was < 1% — not the cause). Task
+    // executorCpuTime counts actual task cycles only, so it is the one
+    // number the disk cannot distort.
     val phases = new graft.core.PhaseMeter
     spark.sparkContext.addSparkListener(phases)
     val phaseJson = scala.collection.mutable.LinkedHashMap.empty[String, String]
@@ -67,16 +60,15 @@ object WriteBench {
     def gcMillis: Long = java.lang.management.ManagementFactory
       .getGarbageCollectorMXBeans.asScala.map(_.getCollectionTime).sum
     def timed[A](section: String)(f: => A): (A, Double, Double, Double) = {
-      meter.reset(); phases.reset()
+      phases.reset()
       val g0 = gcMillis
       val t0 = System.nanoTime()
       val r = f
       val wall = (System.nanoTime() - t0) / 1e9
       val gc = (gcMillis - g0) / 1e3
-      val (_, _, _, cpuMs) = meter.settle()
       phases.settle()
       phaseJson(section) = phases.phasesJson()
-      (r, wall, cpuMs / 1e3, gc)
+      (r, wall, phases.total().cpuMs / 1e3, gc)
     }
 
     val (_, ingestS, ingestCpu, ingestGc) = timed("ingest") {
@@ -103,9 +95,9 @@ object WriteBench {
       try t.read().count() finally sc.setJobDescription(null)
     }
 
-    // OPTIMIZE z-order rewrite (r13): the one remaining write-side
-    // shuffle — deliberate (clustering IS the exchange) — now also in
-    // the decade record so ScaleGate --write watches its exponent
+    // OPTIMIZE z-order rewrite: the one remaining write-side shuffle —
+    // deliberate (clustering IS the exchange) — in the decade record so
+    // ScaleGate --write watches its exponent
     val (_, optimizeS, optimizeCpu, _) = timed("optimize")(
       t.optimize("orderkey", "partkey"))
     val (scan2Cnt, scan2S, _, _) = timed("scan_zorder") {

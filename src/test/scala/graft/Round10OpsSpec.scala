@@ -53,17 +53,6 @@ class Round10OpsSpec extends SparkSpec {
     }
   }
 
-  test("malformed spark.graft.cache.maxPlans fails naming the key") {
-    val df = ((1 to 50).map(i => ("g", i.toDouble))).toDF("grp", "v")
-    spark.conf.set("spark.graft.cache.maxPlans", "many")
-    try {
-      val e = intercept[IllegalArgumentException] {
-        Stats.PlanCache.register(df.groupBy($"grp").agg(sum($"v")))
-      }
-      assert(e.getMessage.contains("spark.graft.cache.maxPlans"))
-    } finally spark.conf.unset("spark.graft.cache.maxPlans")
-  }
-
   // ---- resolveCum sentinel-size skip -------------------------------------
 
   test("resolveCum skips the probe for sentinel-sized (RDD-backed) input") {

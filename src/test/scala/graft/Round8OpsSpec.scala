@@ -345,48 +345,6 @@ class Round8OpsSpec extends SparkSpec {
     assert(Stats.groupedTrend(frac, "grp", "x", "y").count() == 1)
   }
 
-  test("probe/deviation cache entries are bounded, not per-query leaks") {
-    // every distinct auto-mode query persists its rollup (and madOutliers
-    // its deviation rollup); the PlanCache FIFO must rotate old entries
-    // out instead of accumulating MEMORY_AND_DISK entries for the
-    // session's lifetime
-    spark.conf.set("spark.graft.cum.probeMinInputBytes", "0")
-    spark.conf.set("spark.graft.cache.maxPlans", "4")
-    try {
-      for (i <- 0 until 10) { // 10 distinct plans -> 20 registrations
-        val df = (0 until 200).map(j => (s"g${j % 3}", (j % (17 + i)).toDouble))
-          .toDF("grp", "v")
-        Stats.madOutliers(df, "grp", "v").collect()
-      }
-      assert(Stats.PlanCache.size <= 4,
-        s"plan cache must stay bounded (got ${Stats.PlanCache.size})")
-    } finally {
-      spark.conf.unset("spark.graft.cum.probeMinInputBytes")
-      spark.conf.unset("spark.graft.cache.maxPlans")
-    }
-  }
-
-  test("PlanCache: an identical plan from a sibling session HITS one entry") {
-    // sessions of one context share SharedState's CacheManager, so one
-    // persist serves every session — a second registry entry would alias
-    // the same cache entry and eviction of either would silently
-    // un-cache the survivor
-    val data = (0 until 50).map(i => (s"g${i % 3}", i.toLong))
-    val df1 = data.toDF("grp", "v").groupBy("grp").count()
-    val s2 = spark.newSession()
-    val df2 = { import s2.implicits._
-      data.toDF("grp", "v").groupBy("grp").count() }
-    // precondition: the two plans canonicalize identically — otherwise
-    // this test would pass vacuously without exercising the hit path
-    assert(df1.queryExecution.logical.canonicalized ==
-      df2.queryExecution.logical.canonicalized)
-    Stats.PlanCache.register(df1)
-    val before = Stats.PlanCache.size
-    Stats.PlanCache.register(df2)
-    assert(Stats.PlanCache.size === before,
-      "a sibling session's identical plan must reuse the live entry")
-  }
-
   test("groupedTrend: exact mode rejects NULL inputs loudly too") {
     // a NULL y is NULL in `y =!= floor(y)` and would slip past a
     // fraction-only guard into otherwise(0); but n = count(*) counts the
